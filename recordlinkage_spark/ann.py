@@ -100,31 +100,6 @@ def _collect_matrix(df: DataFrame, id_col: str, vec_col: str,
     return ids, _stack(pdf[vec_col])
 
 
-# ---------------------------------------------------------------------------
-# JVM cosine (kept for single-pair / ad-hoc column use; the batch kernels
-# below are the hot path — interpreted higher-order lambdas measured ~35x
-# slower than a fused Arrow matmul, PLANS.md addendum #1)
-# ---------------------------------------------------------------------------
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
-def cosine_sim_col(a, b):
-    """Cosine similarity between two array<double> columns (JVM lambdas).
-
-    Slow path — use ``cosine_pairs`` (Arrow matmul) in anything hot."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def _cosine_pairs_batch(a: pd.Series, b: pd.Series) -> pd.Series:
     ok = (a.notna() & b.notna()).to_numpy()
     out = np.full(len(a), np.nan)

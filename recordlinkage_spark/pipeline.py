@@ -6,15 +6,23 @@ north_rule requirements implemented here:
   to "iceberg" is a one-line change once the runtime has the catalog jars);
 - a manifest (JSON) records stage -> path + row count + wall time; restart
   skips completed stages (resume-from-snapshot semantics);
-- a metrics table records per-stage counts, reduction ratio, and LSH
-  bucket-truncation counts;
+- a metrics table records one row per stage that ran: row count, wall
+  time and, on the pair-expander stages only, the dropped-bucket count;
 - a per-partition lineage table records (stage, partition_id, rows).
 
-Stage graph:
+Stage graph (``run``; ``run_incremental`` runs the same stages under an
+``inc_`` prefix, pairing the new snapshot against a prior run's store,
+with an optional Bloom exact-dedup ``inc_filtered`` stage before
+signing):
 
-  records --(opt. keep-latest recrawl collapse, ts_col=...)--> collapsed
-          --MinHashLSH--> candidates --(∪ FingerprintSubstring)--> pairs
-          --exact-Jaccard verify--> matches --ConnectedComponents--> clusters
+  records --(opt. keep-latest recrawl collapse, ts_col=...)--> recrawls
+          --ONE tokenize+hash Arrow pass--> signatures
+          --shared pair chain (_pair_chain):
+              LSH buckets --> candidates --(opt. degree cap)--> candidates_capped
+                --exact-Jaccard verify--> verified
+              winnowed fingerprints --> substring_pairs   (overlapped thread)
+            verified ∪ substring_pairs, max(jaccard) per pair --> matches
+          --ConnectedComponents--> clusters
 """
 
 from __future__ import annotations
@@ -29,9 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from recordlinkage_spark.config import EngineConfig
-from recordlinkage_spark.minhash import MinHashLSH
 from recordlinkage_spark.network import ConnectedComponents
-from recordlinkage_spark.suffix import FingerprintSubstring
 from recordlinkage_spark.caching import pin
 
 
@@ -96,8 +102,8 @@ class DedupPipeline:
         self.metrics: list[dict] = []
         self._manifest: dict = {}
         # serializes manifest/lineage/metrics mutation when independent
-        # stages run concurrently (run() overlaps the substring pass with
-        # the candidates->verify chain, guide §2.6)
+        # stages run concurrently (_pair_chain overlaps the substring pass
+        # with the candidates->verify chain, guide §2.6)
         self._lock = threading.Lock()
 
     # --- checkpoint plumbing ------------------------------------------------
@@ -190,7 +196,7 @@ class DedupPipeline:
         downstream decisions reuse the count instead of re-running a
         count job over the stage table."""
         for m in self.metrics:
-            if m.get("stage") == name and m.get("rows") is not None:
+            if m["stage"] == name:
                 return m["rows"]
         entry = self._manifest.get(name)
         if entry and entry.get("rows") is not None:
@@ -213,10 +219,10 @@ class DedupPipeline:
                 [(int(r["partition_id"]), int(r["rows"])) for r in parts],
                 "partition_id int, rows long",
             ).withColumn("stage", F.lit(stage))
-            # locked: concurrent stages (run() overlaps the substring
-            # pass) must not append to the shared _lineage path at the
-            # same time — two jobs sharing one _temporary dir can corrupt
-            # the commit
+            # locked: concurrent stages (_pair_chain overlaps the
+            # substring pass) must not append to the shared _lineage path
+            # at the same time — two jobs sharing one _temporary dir can
+            # corrupt the commit
             with self._lock:
                 lineage.write.mode("append").parquet(
                     str(self.work_dir / "_lineage"))
@@ -228,22 +234,138 @@ class DedupPipeline:
         return n
 
     def metrics_df(self, spark: SparkSession) -> DataFrame:
-        """The run's per-stage metrics (rows, seconds, dropped-bucket
-        counts) as ONE tidy DataFrame — the queryable surface for the
-        north_rule's metrics-table requirement (r3; previously the list
-        had to be picked apart by hand)."""
-        rows = [
-            (
-                m.get("stage"),
-                m.get("rows"),
-                m.get("secs"),
-                m.get("dropped_buckets"),
-            )
-            for m in self.metrics
-        ]
+        """The run's metrics as ONE tidy DataFrame, one row per stage that
+        ran — the queryable surface for the north_rule's metrics-table
+        requirement. ``dropped_buckets`` is set on the pair-expander
+        stages only (null elsewhere)."""
+        rows = [(m["stage"], m["rows"], m["secs"], m.get("dropped_buckets"))
+                for m in self.metrics]
         return spark.createDataFrame(
             rows, "stage string, rows long, secs double, dropped_buckets long"
         )
+
+    # --- shared stage chain ----------------------------------------------------
+    def _pair_stage(self, spark: SparkSession, name: str, build) -> DataFrame:
+        """Run-or-resume one pair-expander stage. ``build(acc)`` gets a
+        fresh accumulator for the buckets the streaming expander drops
+        over the cap; the count lands on the stage's own metrics row, so
+        skew/truncation stays observable (north_rule). A resumed stage
+        never ran the expander and records no row."""
+        # locked: SparkContext.accumulator bumps a class-level id counter
+        # unguarded, and the substring thread creates its accumulator
+        # while the main thread creates the candidates one
+        with self._lock:
+            acc = spark.sparkContext.accumulator(0)
+        out = self._stage(spark, name, lambda: build(acc))
+        with self._lock:
+            for m in self.metrics:
+                if m["stage"] == name:
+                    m["dropped_buckets"] = acc.value
+        return out
+
+    def _collapse_recrawls(
+        self, spark: SparkSession, name: str, records: DataFrame,
+        id_col: str, ts_col: str, canonicalize_urls: bool,
+    ) -> tuple[DataFrame, DataFrame]:
+        """Keep-latest recrawl collapse (``webtext.dedup_url_keep_latest``)
+        as a checkpointed stage. Returns ``(collapsed, records)``: the
+        survivor rows (+ ``n_crawls``), and the records every downstream
+        stage keys on — the CANONICAL url under ``id_col``; the surviving
+        raw url stays available in ``collapsed``."""
+        from recordlinkage_spark.webtext import dedup_url_keep_latest
+
+        collapsed = self._stage(
+            spark, name,
+            lambda: dedup_url_keep_latest(
+                records, url_col=id_col, ts_col=ts_col,
+                canonicalize=canonicalize_urls,
+            ),
+        )
+        keep_cols = [c for c in records.columns if c != id_col]
+        return collapsed, collapsed.select(
+            F.col("url_key").alias(id_col), *keep_cols
+        )
+
+    def _pair_chain(
+        self, spark: SparkSession, prefix: str, sh: DataFrame,
+        build_candidates, build_substring,
+    ) -> tuple[DataFrame, DataFrame]:
+        """The pair stages :meth:`run` and :meth:`run_incremental` share:
+        candidates (+ optional degree cap) -> exact-Jaccard verify against
+        ``sh`` (``(id, _sh)`` shingle sets), unioned with the substring
+        pairs into ``matches``. Stage names carry ``prefix``; the two
+        builders take the dropped-bucket accumulator (see
+        :meth:`_pair_stage`). Returns ``(candidates, matches)``."""
+        from recordlinkage_spark.minhash import cap_pair_degree, exact_jaccard
+
+        cfg = self.config
+        # The substring pass depends ONLY on the signatures, so it runs
+        # CONCURRENTLY with the candidates -> verify chain (guide §2.6:
+        # overlap independent jobs so one job's tasks back-fill executors
+        # left idle by the other's stragglers / fixed per-job overhead).
+        # _stage serializes manifest/lineage/metrics mutation behind
+        # self._lock; the Spark scheduler interleaves the two jobs' tasks.
+        # Leaving the block joins the worker thread on every exit path.
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            sub_future = None
+            if self.use_substring_pass:
+                # substring dups have LOW global Jaccard by construction,
+                # so they bypass the Jaccard gate: the winnowing
+                # fingerprint is a deterministic witness of a shared
+                # >=span+window-1-token run.
+                sub_future = pool.submit(
+                    self._pair_stage, spark, prefix + "substring_pairs",
+                    lambda acc: build_substring(acc).withColumn(
+                        "jaccard", F.lit(None).cast("double")),
+                )
+            candidates = self._pair_stage(
+                spark, prefix + "candidates", build_candidates)
+
+            # Boilerplate-clique pressure valve (opt-in): cap each doc's
+            # verified-pair degree before the quadratic shingle gather; the
+            # cluster output is unchanged (minhash.cap_pair_degree docstring
+            # has the connectivity argument + measurements). Its own
+            # checkpointed stage so resume skips the double window shuffle.
+            to_verify, cand_stage = candidates, prefix + "candidates"
+            if cfg.max_verify_degree is not None:
+                cand_stage = prefix + "candidates_capped"
+                to_verify = self._stage(
+                    spark, cand_stage,
+                    lambda: cap_pair_degree(candidates, cfg.max_verify_degree),
+                )
+
+            # verify the LSH candidates with exact Jaccard on shingle-hash
+            # sets (JVM array_intersect/union), threshold filter. The pair
+            # stage already counted itself (_record / manifest), so reuse
+            # that count for the broadcast decision instead of running a
+            # count job over the stage table (r6).
+            n_cand = self._stage_rows(cand_stage)
+            if n_cand is None:  # defensive: fall back to a count job
+                n_cand = to_verify.count()
+            verified = self._stage(
+                spark, prefix + "verified",
+                lambda: exact_jaccard(
+                    sh=sh, cands=to_verify, threshold=self.jaccard_threshold,
+                    broadcast_pairs=n_cand <= 2_000_000,
+                ),
+            )
+            if sub_future is None:
+                return candidates, verified
+            sub_pairs = sub_future.result()
+
+        # merge the two pass outputs per pair with max(jaccard), NOT
+        # dropDuplicates: a pair found by both passes has one row with
+        # the verified jaccard and one with null, and dropDuplicates
+        # keeps whichever arrives first — partitioning-dependent, so
+        # matches.jaccard would flip between runs. max() ignores nulls
+        # and is deterministic (substring-only pairs stay null).
+        matches = self._stage(
+            spark, prefix + "matches",
+            lambda: verified.unionByName(sub_pairs)
+            .groupBy("id_1", "id_2")
+            .agg(F.max("jaccard").alias("jaccard")),
+        )
+        return candidates, matches
 
     # --- the pipeline ---------------------------------------------------------
     def run(
@@ -274,7 +396,7 @@ class DedupPipeline:
         output (survivor rows + ``n_crawls``), checkpointed/resumable
         like every other stage. ``canonicalize_urls=False`` collapses on
         the raw url instead."""
-        from recordlinkage_spark.minhash import bucket_pairs, exact_jaccard
+        from recordlinkage_spark.minhash import bucket_pairs
 
         spark = records.sparkSession
         self._load_manifest()
@@ -285,24 +407,10 @@ class DedupPipeline:
         self.metrics = []
         cfg = self.config
 
-        out_extra: dict[str, DataFrame] = {}
+        out: dict[str, DataFrame] = {}
         if ts_col is not None:
-            from recordlinkage_spark.webtext import dedup_url_keep_latest
-
-            collapsed = self._stage(
-                spark, "recrawls",
-                lambda: dedup_url_keep_latest(
-                    records, url_col=id_col, ts_col=ts_col,
-                    canonicalize=canonicalize_urls,
-                ),
-            )
-            out_extra["collapsed"] = collapsed
-            # downstream identity is the CANONICAL url; the surviving raw
-            # url (and its crawl count) stay available in out['collapsed']
-            keep_cols = [c for c in records.columns if c != id_col]
-            records = collapsed.select(
-                F.col("url_key").alias(id_col), *keep_cols
-            )
+            out["collapsed"], records = self._collapse_recrawls(
+                spark, "recrawls", records, id_col, ts_col, canonicalize_urls)
         id_type = records.schema[id_col].dataType.simpleString()
 
         # the materialized signature stage feeds every downstream pass —
@@ -311,143 +419,31 @@ class DedupPipeline:
             spark, "signatures",
             lambda: _signature_frame(records, cfg, id_col, text_col),
         )
-
-        # The substring pass depends ONLY on signatures, so it runs
-        # CONCURRENTLY with the candidates -> verify chain (guide §2.6:
-        # overlap independent jobs so one job's tasks back-fill executors
-        # left idle by the other's stragglers / fixed per-job overhead).
-        # _stage serializes manifest/lineage/metrics mutation behind
-        # self._lock; the Spark scheduler interleaves the two jobs' tasks.
-        sub_future = None
-        sub_executor = None
-        sub_ran = False
-        if self.use_substring_pass:
-            sub_dropped = spark.sparkContext.accumulator(0)
-
-            def build_sub_pairs() -> DataFrame:
-                fp_rows = signatures.select("id", F.explode("fps").alias("fp"))
-                return bucket_pairs(
-                    fp_rows, ["fp"], cfg.max_bucket_size, id_type,
-                    dropped_acc=sub_dropped,
-                ).withColumn("jaccard", F.lit(None).cast("double"))
-
-            sub_ran = not (self.work_dir and "substring_pairs" in self._manifest)
-            sub_executor = ThreadPoolExecutor(max_workers=1)
-            sub_future = sub_executor.submit(
-                self._stage, spark, "substring_pairs", build_sub_pairs
-            )
-
-        # dropped-bucket accumulators: the streaming pair expander drops
-        # buckets over the cap; the counts land in the metrics list so
-        # skew/truncation stays observable (north_rule)
-        cand_dropped = spark.sparkContext.accumulator(0)
-
-        def build_candidates() -> DataFrame:
-            return bucket_pairs(
+        candidates, matches = self._pair_chain(
+            spark, "", signatures.select("id", F.col("sh").alias("_sh")),
+            lambda acc: bucket_pairs(
                 _band_rows(signatures), ["band_key"], cfg.max_bucket_size,
-                id_type, dropped_acc=cand_dropped,
-            )
+                id_type, dropped_acc=acc,
+            ),
+            lambda acc: bucket_pairs(
+                signatures.select("id", F.explode("fps").alias("fp")),
+                ["fp"], cfg.max_bucket_size, id_type, dropped_acc=acc,
+            ),
+        )
 
-        ran = not (self.work_dir and "candidates" in self._manifest)
-        try:
-            candidates = self._stage(spark, "candidates", build_candidates)
-        except BaseException:
-            if sub_executor is not None:  # don't leak the worker thread
-                sub_executor.shutdown(wait=True)
-            raise
-        if ran:  # resumed stages never ran the expander -> no drop count
-            self.metrics.append(
-                {"stage": "candidates", "dropped_buckets": cand_dropped.value}
-            )
-
-        # Boilerplate-clique pressure valve (opt-in): cap each doc's
-        # verified-pair degree before the quadratic shingle gather; the
-        # cluster output is unchanged (minhash.cap_pair_degree docstring
-        # has the connectivity argument + measurements). Its own
-        # checkpointed stage so resume skips the double window shuffle.
-        try:
-            # Boilerplate-clique pressure valve (opt-in): cap each doc's
-            # verified-pair degree before the quadratic shingle gather; the
-            # cluster output is unchanged (minhash.cap_pair_degree docstring
-            # has the connectivity argument + measurements). Its own
-            # checkpointed stage so resume skips the double window shuffle.
-            to_verify = candidates
-            if cfg.max_verify_degree is not None:
-                from recordlinkage_spark.minhash import cap_pair_degree
-
-                to_verify = self._stage(
-                    spark, "candidates_capped",
-                    lambda: cap_pair_degree(candidates, cfg.max_verify_degree),
-                )
-
-            # verify the LSH candidates with exact Jaccard on shingle-hash
-            # sets (JVM array_intersect/union), threshold filter. The pair
-            # stage already counted itself (_record / manifest), so reuse
-            # that count for the broadcast decision instead of running a
-            # count job over the stage table (r6).
-            cand_stage = (
-                "candidates_capped" if cfg.max_verify_degree is not None
-                else "candidates"
-            )
-            n_cand = self._stage_rows(cand_stage)
-            if n_cand is None:  # defensive: fall back to a count job
-                n_cand = to_verify.count()
-            verified = self._stage(
-                spark, "verified",
-                lambda: exact_jaccard(
-                    sh=signatures.select("id", F.col("sh").alias("_sh")),
-                    cands=to_verify, threshold=self.jaccard_threshold,
-                    broadcast_pairs=n_cand <= 2_000_000,
-                ),
-            )
-        except BaseException:
-            if sub_executor is not None:
-                sub_executor.shutdown(wait=True)
-            raise
-
-        if self.use_substring_pass:
-            # substring dups have LOW global Jaccard by construction, so
-            # they bypass the Jaccard gate: the winnowing fingerprint is a
-            # deterministic witness of a shared >=span+window-1-token run.
-            # (launched concurrently above — join the worker thread here)
-            try:
-                sub_pairs = sub_future.result()
-            finally:
-                sub_executor.shutdown(wait=True)
-            if sub_ran:
-                self.metrics.append(
-                    {"stage": "substring_pairs", "dropped_buckets": sub_dropped.value}
-                )
-            # merge the two pass outputs per pair with max(jaccard), NOT
-            # dropDuplicates: a pair found by both passes has one row with
-            # the verified jaccard and one with null, and dropDuplicates
-            # keeps whichever arrives first — partitioning-dependent, so
-            # matches.jaccard would flip between runs. max() ignores nulls
-            # and is deterministic (substring-only pairs stay null).
-            matches = self._stage(
-                spark, "matches",
-                lambda: verified.unionByName(sub_pairs)
-                .groupBy("id_1", "id_2")
-                .agg(F.max("jaccard").alias("jaccard")),
-            )
-        else:
-            matches = verified
-        pairs = candidates
-
-        cc = ConnectedComponents()
         clusters = self._stage(
             spark, "clusters",
             # matches is a materialized stage table -> skip CC's
             # defensive lineage pin (one less checkpoint job, r6)
-            lambda: cc.compute(
+            lambda: ConnectedComponents().compute(
                 matches.select("id_1", "id_2"), input_pinned=True
             ).withColumnRenamed("id", id_col),
         )
-        out = {"pairs": pairs, "matches": matches, "clusters": clusters,
-               # the per-doc signature stage (id, bands, fps, sh) — the
-               # store a later run_incremental pairs new snapshots against
-               "signatures": signatures}
-        out.update(out_extra)
+        out.update({"pairs": candidates, "matches": matches,
+                    "clusters": clusters,
+                    # the per-doc signature stage (id, bands, fps, sh) — the
+                    # store a later run_incremental pairs new snapshots against
+                    "signatures": signatures})
         if self.remove_spans:
             # ExactSubstr span removal (suffix.remove_duplicate_spans):
             # rewrites the TEXT, complementing the doc-level cluster/keep
@@ -544,7 +540,7 @@ class DedupPipeline:
         Returns ``{'pairs', 'matches', 'clusters'}`` plus
         ``'collapsed'`` / ``'new_unique'`` when tiers 1 / 2 ran.
         """
-        from recordlinkage_spark.minhash import exact_jaccard, pairs_against_bands
+        from recordlinkage_spark.minhash import pairs_against_bands
 
         spark = new_records.sparkSession
         self._load_manifest()
@@ -554,31 +550,17 @@ class DedupPipeline:
         out: dict[str, DataFrame] = {}
         records = new_records
         if ts_col is not None:
-            from recordlinkage_spark.webtext import dedup_url_keep_latest
-
-            collapsed = self._stage(
-                spark, "inc_recrawls",
-                lambda: dedup_url_keep_latest(
-                    records, url_col=id_col, ts_col=ts_col,
-                    canonicalize=canonicalize_urls,
-                ),
-            )
-            out["collapsed"] = collapsed
-            keep_cols = [c for c in records.columns if c != id_col]
-            records = collapsed.select(
-                F.col("url_key").alias(id_col), *keep_cols
-            )
+            out["collapsed"], records = self._collapse_recrawls(
+                spark, "inc_recrawls", records, id_col, ts_col,
+                canonicalize_urls)
         if exact_dedup_against is not None:
             from recordlinkage_spark.bloom import dedup_against
 
             keys = list(exact_keys) if exact_keys else [text_col]
-            batch = records
-            filtered = self._stage(
+            out["new_unique"] = records = self._stage(
                 spark, "inc_filtered",
-                lambda: dedup_against(batch, exact_dedup_against, keys),
+                lambda: dedup_against(records, exact_dedup_against, keys),
             )
-            out["new_unique"] = filtered
-            records = filtered
         id_type = records.schema[id_col].dataType.simpleString()
 
         signatures = self._stage(
@@ -591,108 +573,24 @@ class DedupPipeline:
             signatures.select("id"), "id", "left_anti"
         )
 
-        cand_dropped = spark.sparkContext.accumulator(0)
+        def fps(sig: DataFrame) -> DataFrame:
+            return sig.select("id", F.explode("fps").alias("band_key"))
 
-        def build_candidates() -> DataFrame:
-            return pairs_against_bands(
+        # same chain as run(), restricted to pairs touching a new doc: both
+        # passes and the verify gather depend only on (signatures, store_sigs)
+        candidates, matches = self._pair_chain(
+            spark, "inc_",
+            signatures.select("id", F.col("sh").alias("_sh")).unionByName(
+                store_sigs.select("id", F.col("sh").alias("_sh"))),
+            lambda acc: pairs_against_bands(
                 _band_rows(signatures), _band_rows(store_sigs), id_type,
-                cfg.max_bucket_size, dropped_acc=cand_dropped,
-            )
-
-        # overlap the substring pass with the candidates -> verify chain,
-        # exactly as run() does (guide §2.6) — both depend only on
-        # (signatures, store_sigs)
-        sub_future = None
-        sub_executor = None
-        sub_ran = False
-        if self.use_substring_pass:
-            sub_dropped = spark.sparkContext.accumulator(0)
-
-            def build_sub_pairs() -> DataFrame:
-                new_fp = signatures.select(
-                    "id", F.explode("fps").alias("band_key"))
-                old_fp = store_sigs.select(
-                    "id", F.explode("fps").alias("band_key"))
-                return pairs_against_bands(
-                    new_fp, old_fp, id_type, cfg.max_bucket_size,
-                    dropped_acc=sub_dropped,
-                ).withColumn("jaccard", F.lit(None).cast("double"))
-
-            sub_ran = not (
-                self.work_dir and "inc_substring_pairs" in self._manifest
-            )
-            sub_executor = ThreadPoolExecutor(max_workers=1)
-            sub_future = sub_executor.submit(
-                self._stage, spark, "inc_substring_pairs", build_sub_pairs
-            )
-
-        ran = not (self.work_dir and "inc_candidates" in self._manifest)
-        try:
-            candidates = self._stage(spark, "inc_candidates", build_candidates)
-            if ran:
-                self.metrics.append(
-                    {"stage": "inc_candidates",
-                     "dropped_buckets": cand_dropped.value}
-                )
-
-            # same boilerplate-clique valve as run(): a snapshot whose docs
-            # share a header with the store forms a true new-vs-store
-            # near-clique, and the verify gather is quadratic in it
-            to_verify = candidates
-            if cfg.max_verify_degree is not None:
-                from recordlinkage_spark.minhash import cap_pair_degree
-
-                to_verify = self._stage(
-                    spark, "inc_candidates_capped",
-                    lambda: cap_pair_degree(candidates, cfg.max_verify_degree),
-                )
-
-            sh_all = signatures.select(
-                "id", F.col("sh").alias("_sh")
-            ).unionByName(store_sigs.select("id", F.col("sh").alias("_sh")))
-            # reuse the pair stage's own count (see run(); r6)
-            cand_stage = (
-                "inc_candidates_capped" if cfg.max_verify_degree is not None
-                else "inc_candidates"
-            )
-            n_cand = self._stage_rows(cand_stage)
-            if n_cand is None:
-                n_cand = to_verify.count()
-            verified = self._stage(
-                spark, "inc_verified",
-                lambda: exact_jaccard(
-                    sh=sh_all, cands=to_verify,
-                    threshold=self.jaccard_threshold,
-                    broadcast_pairs=n_cand <= 2_000_000,
-                ),
-            )
-        except BaseException:
-            if sub_executor is not None:  # don't leak the worker thread
-                sub_executor.shutdown(wait=True)
-            raise
-
-        if self.use_substring_pass:
-            try:
-                sub_pairs = sub_future.result()
-            finally:
-                sub_executor.shutdown(wait=True)
-            if sub_ran:
-                self.metrics.append(
-                    {"stage": "inc_substring_pairs",
-                     "dropped_buckets": sub_dropped.value}
-                )
-            # same deterministic max(jaccard) merge as run() — see the
-            # matches stage comment there
-            matches = self._stage(
-                spark, "inc_matches",
-                lambda: verified.unionByName(sub_pairs)
-                .groupBy("id_1", "id_2")
-                .agg(F.max("jaccard").alias("jaccard")),
-            )
-        else:
-            matches = verified
-
-        cc = ConnectedComponents()
+                cfg.max_bucket_size, dropped_acc=acc,
+            ),
+            lambda acc: pairs_against_bands(
+                fps(signatures), fps(store_sigs), id_type,
+                cfg.max_bucket_size, dropped_acc=acc,
+            ),
+        )
 
         def build_clusters() -> DataFrame:
             edges = matches.select("id_1", "id_2")
@@ -702,7 +600,8 @@ class DedupPipeline:
                     F.col("cluster_id").alias("id_2"),
                 ).filter(F.col("id_1") != F.col("id_2"))
                 edges = edges.unionByName(prior_edges)
-            return cc.compute(edges).withColumnRenamed("id", id_col)
+            return ConnectedComponents().compute(edges).withColumnRenamed(
+                "id", id_col)
 
         clusters = self._stage(spark, "inc_clusters", build_clusters)
         out.update({"pairs": candidates, "matches": matches,

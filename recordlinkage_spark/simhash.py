@@ -21,31 +21,6 @@ from pyspark.sql.types import LongType
 from recordlinkage_spark import textfns
 
 
-def make_simhash_udf():
-    """pandas UDF: array<bigint> token/shingle hashes -> int64 simhash."""
-
-    def batch(hashes: pd.Series) -> pd.Series:
-        np.seterr(over="ignore")
-        lengths = np.array([0 if h is None else len(h) for h in hashes], dtype=np.int64)
-        valid = lengths > 0
-        if not valid.any():
-            return pd.Series([None] * len(hashes))
-        flat = np.concatenate(
-            [np.asarray(h, dtype=np.int64) for h, v in zip(hashes, valid) if v]
-        ).view(np.uint64)
-        sigs = _simhash_from_segments(flat, lengths[valid])
-        out = np.zeros(len(hashes), dtype=np.int64)
-        out[valid] = sigs
-        # nullable Int64: assigning None to a plain int64 Series would
-        # upcast to float64 and corrupt the low signature bits
-        res = pd.Series(out, dtype="Int64")
-        res[~valid] = pd.NA
-        return res
-
-    # see minhash.make_band_udf: prevents duplicate evaluation on pushdown
-    return F.pandas_udf(batch, LongType()).asNondeterministic()
-
-
 _CHUNK_HASHES = 16384  # doc-aligned cache block (bits matrix ~1 MB int8)
 
 

@@ -434,13 +434,6 @@ def with_word_shingle_hashes(df, text_col: str, n: int, out: str = "_sh"):
     return df.drop("_toks__", "_th__")
 
 
-def word_shingle_hashes(tok_col: Column, n: int) -> Column:
-    """Single-expression variant for small/test data. On hot paths use
-    :func:`with_word_shingle_hashes` (bound columns, no re-inlining)."""
-    th = token_hashes(tok_col)
-    return gram_hashes(th, F.size(tok_col), n)
-
-
 # --- language ID (n-gram/stopword heuristic) -------------------------------
 
 LANG_MARKERS = {

@@ -2,6 +2,8 @@
 plus the end-to-end pipeline recall gate on the planted-duplicate corpus
 (FIXTURES.md F1; BASELINE.json dup-pair recall >= 0.99)."""
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -515,5 +517,111 @@ def test_pipeline_metrics_reset_per_run(spark, tmp_path):
     pipe.run(docs, id_col="url", text_col="text")
     pipe.work_dir = tmp_path / "r2"
     pipe.run(docs, id_col="url", text_col="text")
-    stages = [m["stage"] for m in pipe.metrics if "rows" in m]
+    stages = [m["stage"] for m in pipe.metrics]
     assert len(stages) == len(set(stages))  # each stage exactly once
+    # one row per stage: the expander's drop count rides on its own row,
+    # and no other stage carries the key
+    cand = next(m for m in pipe.metrics if m["stage"] == "candidates")
+    assert cand["rows"] is not None and cand["dropped_buckets"] == 0
+    assert {m["stage"] for m in pipe.metrics if "dropped_buckets" in m} == {
+        "candidates", "substring_pairs"}
+
+
+@pytest.fixture(scope="module")
+def split_corpus(spark):
+    docs, _ = webtext_corpus(spark, n_docs=120, dup_fraction=0.3, seed=5)
+    docs = docs.cache()
+    is_new = F.abs(F.hash("url")) % 3 == 0
+    return docs.filter(~is_new), docs.filter(is_new)
+
+
+@pytest.mark.parametrize("entry", ["run", "run_incremental"])
+@pytest.mark.parametrize("failing", ["substring_pairs", "verified"])
+def test_pipeline_stage_failure_then_resume(spark, split_corpus, tmp_path,
+                                            entry, failing):
+    """A stage that raises — in the overlapped substring thread or on the
+    main candidates -> verify chain — fails the call without leaking the
+    worker thread, and a fresh pipeline on the same work_dir resumes: it
+    re-runs only the stages that had not completed and returns the
+    clusters of an uninterrupted run."""
+    old, new = split_corpus
+    cfg = EngineConfig(num_perm=32, lsh_bands=8, lsh_rows=4)
+    prefix = "" if entry == "run" else "inc_"
+    if entry == "run":
+        args = (old.unionByName(new),)
+    else:
+        base = DedupPipeline(cfg, jaccard_threshold=0.5).run(
+            old, id_col="url", text_col="text")
+        args = (new, base["signatures"], base["clusters"])
+
+    def call(pipe):
+        out = getattr(pipe, entry)(*args, id_col="url", text_col="text")
+        return sorted(map(tuple, out["clusters"].collect()))
+
+    ref = DedupPipeline(cfg, jaccard_threshold=0.5)
+    want = call(ref)
+    all_stages = {m["stage"] for m in ref.metrics}
+    assert prefix + failing in all_stages
+
+    work = str(tmp_path / "wd")
+    broken = DedupPipeline(cfg, work_dir=work, jaccard_threshold=0.5)
+    inner = broken._stage
+
+    def _stage(spark, name, build):
+        if name == prefix + failing:
+            raise RuntimeError(f"injected failure in {name}")
+        return inner(spark, name, build)
+
+    broken._stage = _stage
+    threads_before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="injected failure"):
+        call(broken)
+    leaked = [t for t in set(threading.enumerate()) - threads_before
+              if t.name.startswith("ThreadPoolExecutor")]
+    assert leaked == []
+    completed = set(broken._manifest)
+    assert completed and prefix + failing not in completed
+
+    resumed = DedupPipeline(cfg, work_dir=work, jaccard_threshold=0.5)
+    assert call(resumed) == want
+    rerun = [m["stage"] for m in resumed.metrics]
+    assert sorted(rerun) == sorted(all_stages - completed)
+    assert {m["stage"] for m in resumed.metrics if "dropped_buckets" in m} \
+        == {s for s in rerun if s.endswith(("candidates", "substring_pairs"))}
+
+
+def test_pair_stage_threads_get_distinct_accumulators(spark):
+    """Stress: many threads entering _pair_stage at once (as the substring
+    thread and the main chain do) each get their own accumulator, and
+    each drop count lands on its own stage's metrics row."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.accumulators import _accumulatorRegistry
+
+    pipe = DedupPipeline()
+    accs = {}
+
+    def fake_stage(spark, name, build):
+        accs[name] = build()
+        pipe.metrics.append({"stage": name, "rows": 0, "secs": 0.0})
+
+    pipe._stage = fake_stage
+
+    def one(i):
+        def build(acc):
+            acc.add(i)
+            return acc
+        pipe._pair_stage(spark, f"s{i}", build)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            list(pool.map(one, range(200)))
+    finally:
+        sys.setswitchinterval(old)
+    assert len({a.aid for a in accs.values()}) == 200
+    assert all(_accumulatorRegistry[a.aid] is a for a in accs.values())
+    assert {m["stage"]: m["dropped_buckets"] for m in pipe.metrics} == {
+        f"s{i}": i for i in range(200)}
